@@ -1489,7 +1489,7 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
     (fail fast, never a silently empty evaluation)."""
     from pyspark.sql import functions as F
 
-    from photon_ml_spark.functions import metrics
+    from photon_ml_spark.operators.indexing import release_local_checkpoint
 
     if "response" not in scored.columns:
         raise ValueError(
@@ -1501,28 +1501,23 @@ def _evaluate_scores(scored, evaluators: list) -> dict:
         if "offset" in scored.columns
         else F.lit(0.0)
     )
-    # one scoring pass feeds every requested metric: without the
-    # persist each .first() below re-executes the full scoring plan
-    # (random-effect joins included) once per evaluator
-    sdf = scored.withColumn("__eval_margin", F.col("score") + off).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # one scoring pass feeds every requested metric: without it each
+    # .first() below re-executes the full scoring plan (random-effect
+    # joins included) once per evaluator. A checkpoint rather than a
+    # persist: the AUC family reads its tie-grouped scores in several
+    # plan branches, and adaptive execution shares one shuffle between
+    # them only over a plain RDD scan — over a cached relation every
+    # branch re-runs the scoring and the tie-group shuffle.
+    sdf = scored.withColumn("__eval_margin", F.col("score") + off)
+    sdf = sdf.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
     )
-    # drain scope (r14): only tie-group relations registered by THIS
-    # call's metrics are dropped in the finally — entries that predate
-    # the mark may be pinned hot by an unrelated in-flight evaluation
-    # (multi-threaded driver) and are not ours to evict
-    tie_mark = metrics.roc_tie_cache_mark()
     try:
         return _evaluate_scores_body(sdf, evaluators)
     finally:
-        # unpersist on EVERY exit — an unknown evaluator name or an
-        # undefined metric raises mid-loop and must not leak the cache.
-        # The AUC-family metrics register a persisted tie-group relation
-        # in the bounded metrics cache; every action of this call has
-        # run by now, so drain it too — a scoring driver leaves no
-        # persisted metric state behind (success or error alike).
-        sdf.unpersist()
-        metrics.release_roc_tie_cache(keep=tie_mark)
+        # release on EVERY exit — an unknown evaluator name or an
+        # undefined metric raises mid-loop and must not leak the blocks
+        release_local_checkpoint(sdf)
 
 
 def _evaluate_scores_body(sdf, evaluators) -> dict:

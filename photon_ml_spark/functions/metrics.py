@@ -54,202 +54,151 @@ def loss_metric(
 
 # ------------------------------------------------------------------- AUC family
 
-#: Number of equi-width score buckets for the two-phase cumulative sum.
-#: Cumulative work per task is O(distinct_scores / ROC_BUCKETS); 4096
-#: buckets keeps per-bucket windows small even at billions of rows while
-#: the bucket-offset triangular join stays a trivial broadcast.
+#: Number of equi-width score buckets ``_roc_fold`` splits the distinct
+#: scores into. One task folds each bucket over its own sorted
+#: (s, pos, neg) array, so per-task work and memory are O(distinct
+#: scores in the bucket), never O(all distinct scores); the
+#: cross-bucket step only sees the ≤ ROC_BUCKETS bucket totals (a
+#: broadcast self-join of at most ROC_BUCKETS² pairs). Read at call
+#: time.
 ROC_BUCKETS = 4096
 
-#: Bounded registry of persisted tie-group relations (see _roc_points).
-#: Each auroc/aupr/peak_f1 call pins one (s, pos, neg) relation — one
-#: row per DISTINCT score, i.e. row-set-sized on continuous scores — and
-#: the metric functions return lazy frames, so nothing in the call can
-#: know when the consumer's action has run. A loop caller (the λ-sweep
-#: model selection, per-iteration CD validation) would otherwise pin one
-#: relation per evaluation for the life of the session. Keep the last
-#: few (plan-identical calls share ONE CacheManager entry, so the a10/
-#: a10b/a12 trio costs one slot); evicting a still-lazy frame is safe —
-#: its consumer just recomputes (correctness never depends on the cache).
-_TIE_CACHE: list = []
-_TIE_CACHE_MAX = 4
-_TIE_CACHE_LOCK = __import__("threading").Lock()
 
+def _roc_fold(df: DataFrame, score, label, weight, term, combine,
+              init) -> DataFrame:
+    """Fold ``term`` over every tie-grouped ROC point in descending
+    score order, in ONE plan; returns one row per non-empty bucket
+    with the bucket's folded value ``v`` and the global totals
+    ``total_pos``/``total_neg``.
 
-def roc_tie_cache_mark() -> list:
-    """Snapshot of the current registry entries. A consumer that wants
-    to drain only the relations ITS work registered (the CLI
-    evaluators) takes a mark before the work and passes it to
-    ``release_roc_tie_cache(keep=mark)`` — entries that predate the
-    mark (possibly pinned by an unrelated in-flight evaluation on
-    another driver thread) stay registered."""
-    with _TIE_CACHE_LOCK:
-        return list(_TIE_CACHE)
+    1. tie-group by exact score → (s, pos, neg) (the only shuffle of
+       the scored rows);
+    2. broadcast the global min/max/totals and assign each distinct
+       score to one of ``ROC_BUCKETS`` equi-width ranges
+       (``width_bucket`` — deterministic, no sampling; higher bucket =
+       higher scores);
+    3. per bucket: its totals, and its points as one array sorted by
+       score descending;
+    4. per bucket: positives/negatives of all strictly higher buckets
+       (a broadcast join of the ≤ ``ROC_BUCKETS`` bucket totals with
+       themselves) — the fold's starting point;
+    5. per bucket: an ``F.aggregate`` fold over the sorted array that
+       carries the cumulative (tp, fp) and combines
+       ``term(prev_tp, prev_fp, tp, fp, pos, neg, total_pos)`` into
+       ``v`` with ``combine(v, term)``, starting from ``init``.
 
-
-def release_roc_tie_cache(keep: list | None = None) -> None:
-    """Drain the bounded tie-group registry: unpersist every entry now
-    instead of waiting for LRU eviction. For terminal consumers whose
-    metric actions have already run (the CLI evaluators' report-and-
-    exit path) so a scoring driver leaves no persisted metric state
-    behind. Safe at any time: a still-lazy consumer of an evicted
-    relation just recomputes — correctness never depends on the cache.
-
-    ``keep``: entries (a ``roc_tie_cache_mark`` snapshot) to leave
-    registered — scopes the drain to relations registered after the
-    mark, so one consumer's cleanup cannot evict cache entries an
-    unrelated concurrent evaluation is still reading hot (r14, the
-    r13 advice's drain-scoping fix)."""
-    kept_ids = {id(g) for g in keep} if keep else set()
-    with _TIE_CACHE_LOCK:
-        survivors = []
-        while _TIE_CACHE:
-            g = _TIE_CACHE.pop()
-            if id(g) in kept_ids:
-                survivors.append(g)
-            else:
-                g.unpersist()
-        _TIE_CACHE.extend(reversed(survivors))
-
-
-def _tie_cache_get(g: DataFrame) -> DataFrame:
-    """Registry lookup with plan-identity dedupe (r14, fixing the r13
-    advice's shared-entry eviction bug): plan-identical calls (the
-    a10/a10b/a12 trio, AUC+AUPR over one scored frame) previously
-    appended MULTIPLE handles that shared ONE CacheManager entry, so
-    LRU-evicting the older handle unpersisted data a newer 'cached'
-    slot still expected hot. Now a semantically-equal registered entry
-    is reused (and moved to MRU) instead of re-registered; only on a
-    miss is the relation persisted and appended. The lock makes the
-    registry safe for multi-threaded drivers (guide §2.6 overlapped
-    jobs)."""
-    with _TIE_CACHE_LOCK:
-        for i, existing in enumerate(_TIE_CACHE):
-            if existing.sameSemantics(g):
-                _TIE_CACHE.append(_TIE_CACHE.pop(i))
-                return existing
-        from pyspark.storagelevel import StorageLevel
-
-        g = g.persist(StorageLevel.MEMORY_AND_DISK)
-        _TIE_CACHE.append(g)
-        while len(_TIE_CACHE) > _TIE_CACHE_MAX:
-            _TIE_CACHE.pop(0).unpersist()
-        return g
-
-
-def _roc_points(df: DataFrame, score, label, weight,
-                buckets: int = ROC_BUCKETS) -> DataFrame:
-    """Tie-grouped cumulative positives/negatives ordered by score desc,
-    computed as a partition-parallel two-phase cumulative sum:
-
-    1. tie-group by exact score → (s, pos, neg);
-    2. assign each distinct score to one of ``buckets`` equi-width score
-       ranges (``width_bucket`` against the broadcast global min/max —
-       deterministic, no sampling);
-    3. per-bucket running sums via a window *partitioned by bucket*
-       (parallel across buckets — never a single-task global window);
-    4. per-bucket totals → prefix offsets for strictly-higher buckets
-       via a triangular join over the tiny ≤``buckets``-row totals frame,
-       broadcast back.
-
-    ctp/cfp = local running sum + higher-bucket offset. Also carries the
-    exact global totals (total_pos, total_neg) so downstream metrics
-    need no extra pass. Equi-width buckets can be uneven on very skewed
-    score distributions, but per-bucket work is still bounded by the
-    densest score range rather than the whole relation.
+    The stats, totals and points branches all read the tie-group
+    exchange, and Spark runs it once for all of them, so nothing is
+    cached between calls. (Adaptive execution shares that exchange
+    only when the input is not a cached relation: over a ``persist``-ed
+    frame each branch re-runs its scan and shuffle — evaluate a
+    ``localCheckpoint`` instead.) Equi-width buckets can be uneven on
+    very skewed score distributions: a bucket's sorted array is held by
+    one task, so the densest score range bounds per-task memory.
     """
     w = _w(weight)
-    # cache the tie-grouped relation (narrow: one (s, pos, neg) row per
-    # distinct score): it feeds THREE plan branches — the min/max/total
-    # stats, the per-bucket totals (via offsets), and the final windowed
-    # select — and uncached each branch re-executed the full scan +
-    # tie-group shuffle of the scored frame (r13, guide §5 cache-on-
-    # reuse; the flagship AUROC alone re-aggregated its 600k-row scored
-    # frame three times). SERIALIZED level per the PLANS.md corpus rule.
-    g = _tie_cache_get(
-        df.groupBy(F.col(score).alias("s")).agg(
-            F.sum(w * F.col(label)).alias("pos"),
-            F.sum(w * (F.lit(1.0) - F.col(label))).alias("neg"),
-        )
+    g = df.groupBy(F.col(score).alias("s")).agg(
+        F.sum(w * F.col(label)).cast("double").alias("pos"),
+        F.sum(w * (F.lit(1.0) - F.col(label))).cast("double").alias("neg"),
     )
+    buckets = ROC_BUCKETS
     stats = g.agg(
         F.min("s").alias("__lo"), F.max("s").alias("__hi"),
         F.sum("pos").alias("total_pos"), F.sum("neg").alias("total_neg"),
     )
-    gb = g.join(F.broadcast(stats)).withColumn(
-        "__bkt",
+    gb = g.join(F.broadcast(stats)).select(
+        "s", "pos", "neg", "total_pos", "total_neg",
         F.when(
             F.col("__hi") > F.col("__lo"),
             F.least(
                 F.lit(buckets),
                 F.width_bucket("s", "__lo", "__hi", F.lit(buckets)),
             ),
-        ).otherwise(F.lit(1)),
+        ).otherwise(F.lit(1)).alias("__bkt"),
     )
-    totals = gb.groupBy("__bkt").agg(
+    keys = ["__bkt", "total_pos", "total_neg"]
+    totals = gb.groupBy(*keys).agg(
         F.sum("pos").alias("__tp"), F.sum("neg").alias("__tn")
     )
-    higher = totals.select(F.col("__bkt").alias("__hb"),
-                           F.col("__tp"), F.col("__tn"))
+    higher = totals.select(
+        F.col("__bkt").alias("__hb"), F.col("__tp").alias("__htp"),
+        F.col("__tn").alias("__htn"),
+    )
+    above = F.col("__hb") > F.col("__bkt")
+    # grouping by the bucket's own totals too keeps both join sides the
+    # same aggregate, so Spark runs it once
     offsets = (
-        totals.select("__bkt")
-        .join(higher, F.col("__hb") > F.col("__bkt"), "left")
-        .groupBy("__bkt")
+        totals.crossJoin(F.broadcast(higher))
+        .groupBy(*keys, "__tp", "__tn")
         .agg(
-            F.coalesce(F.sum("__tp"), F.lit(0.0)).alias("__op"),
-            F.coalesce(F.sum("__tn"), F.lit(0.0)).alias("__on"),
+            F.sum(F.when(above, F.col("__htp")).otherwise(0.0)).alias("__op"),
+            F.sum(F.when(above, F.col("__htn")).otherwise(0.0)).alias("__on"),
         )
+        .drop("__tp", "__tn")
     )
-    local = Window.partitionBy("__bkt").orderBy(F.desc("s")).rowsBetween(
-        Window.unboundedPreceding, 0
+    points = gb.groupBy(*keys).agg(
+        F.sort_array(
+            F.collect_list(F.struct("s", "pos", "neg")), asc=False
+        ).alias("__pts")
     )
-    return gb.join(F.broadcast(offsets), "__bkt").select(
-        "s", "pos", "neg", "total_pos", "total_neg",
-        (F.sum("pos").over(local) + F.col("__op")).alias("ctp"),
-        (F.sum("neg").over(local) + F.col("__on")).alias("cfp"),
+    P = F.col("total_pos")
+
+    def step(acc, x):
+        tp, fp = acc["tp"] + x["pos"], acc["fp"] + x["neg"]
+        t = term(acc["tp"], acc["fp"], tp, fp, x["pos"], x["neg"], P)
+        return F.struct(tp.alias("tp"), fp.alias("fp"),
+                        combine(acc["v"], t).alias("v"))
+
+    start = F.struct(F.col("__op").alias("tp"), F.col("__on").alias("fp"),
+                     init.cast("double").alias("v"))
+    return points.join(F.broadcast(offsets), keys).select(
+        F.aggregate("__pts", start, step)["v"].alias("v"),
+        "total_pos", "total_neg",
     )
+
+
+def _sum_terms(v, t):
+    # nulls (a 0/0 point) are skipped, like SQL SUM
+    return v + F.coalesce(t, F.lit(0.0))
 
 
 def auroc(df: DataFrame, score="score", label="label", weight=None) -> DataFrame:
     """Weighted AUROC via trapezoid sweep over tie-grouped score groups
-    (AreaUnderROCCurveLocalEvaluator.scala:36-72). The previous point's
-    cumulative counts are recovered algebraically (prev_ctp = ctp − pos,
-    prev_cfp = cfp − neg) so no lag window is needed; the cumulative
-    sums themselves come from the bucketed two-phase ``_roc_points`` —
-    no unpartitioned window anywhere in the plan."""
-    pts = _roc_points(df, score, label, weight)
-    # trapezoid: (cfp - prev_cfp) * (ctp + prev_ctp) / 2 with
-    # prev_* = cumulative minus this tie-group's own mass.
-    area = F.col("neg") * (F.lit(2.0) * F.col("ctp") - F.col("pos")) / 2.0
+    (AreaUnderROCCurveLocalEvaluator.scala:36-72): each point adds
+    (fp − prev_fp)·(tp + prev_tp)/2, folded by ``_roc_fold``."""
+    pts = _roc_fold(
+        df, score, label, weight,
+        lambda ptp, pfp, tp, fp, pos, neg, P: neg * (ptp + tp) / 2.0,
+        _sum_terms, F.lit(0.0),
+    )
     return pts.agg(
-        (F.sum(area) / (F.max("total_pos") * F.max("total_neg"))).alias("auroc")
+        (F.sum("v") / (F.max("total_pos") * F.max("total_neg"))).alias("auroc")
     )
 
 
 def aupr(df: DataFrame, score="score", label="label", weight=None) -> DataFrame:
     """Weighted area under the precision-recall curve, trapezoid between
     consecutive tie-grouped points; curve starts at (recall=0,
-    precision=1) by convention (AreaUnderPRCurveEvaluator). Previous
-    point recovered algebraically — no lag window."""
-    pts = _roc_points(df, score, label, weight)
-    prec = F.col("ctp") / (F.col("ctp") + F.col("cfp"))
-    ptp = F.col("ctp") - F.col("pos")
-    pdenom = ptp + (F.col("cfp") - F.col("neg"))
-    pprec = F.when(pdenom > 0, ptp / pdenom).otherwise(F.lit(1.0))
-    term = F.col("pos") * (prec + pprec) / 2.0
-    return pts.agg((F.sum(term) / F.max("total_pos")).alias("aupr"))
+    precision=1) by convention (AreaUnderPRCurveEvaluator)."""
+
+    def term(ptp, pfp, tp, fp, pos, neg, P):
+        pprec = F.when(ptp + pfp > 0, ptp / (ptp + pfp)).otherwise(F.lit(1.0))
+        return pos * (tp / (tp + fp) + pprec) / 2.0
+
+    pts = _roc_fold(df, score, label, weight, term, _sum_terms, F.lit(0.0))
+    return pts.agg((F.sum("v") / F.max("total_pos")).alias("aupr"))
 
 
 def peak_f1(df: DataFrame, score="score", label="label", weight=None) -> DataFrame:
     """Best F1 over all score thresholds (Evaluation.scala:40-165
     PEAK_F1_SCORE): at each tie-grouped threshold,
-    F1 = 2·TP / (TP + FP + P). P comes from the carried global total —
-    one bucketed sweep, no per-threshold scan, no global window."""
-    pts = _roc_points(df, score, label, weight)
-    f1 = (
-        F.lit(2.0) * F.col("ctp")
-        / (F.col("ctp") + F.col("cfp") + F.col("total_pos"))
+    F1 = 2·TP / (TP + FP + P), P the global positive total."""
+    pts = _roc_fold(
+        df, score, label, weight,
+        lambda ptp, pfp, tp, fp, pos, neg, P: 2.0 * tp / (tp + fp + P),
+        F.greatest, F.lit(None),
     )
-    return pts.agg(F.max(f1).alias("peak_f1"))
+    return pts.agg(F.max("v").alias("peak_f1"))
 
 
 def logistic_data_loglik_and_aic(

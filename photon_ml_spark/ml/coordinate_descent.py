@@ -7,64 +7,61 @@ an iterative training loop):
 
 - coordinates train in sequence; each sees the others' current scores
   as extra offset (residual attach, J1/J2)
-- the summed score set is maintained INCREMENTALLY:
-  ``summed − old_i + new_i`` (outer-join arithmetic J11,
-  CoordinateDescent.scala:412-415,441-446) — never a full rescore
+- the residual offset is RE-DERIVED per update, not maintained
+  incrementally: each update trains on one projection over the pinned
+  input, ``offset + Σ score_c(df)`` over the other coordinates that
+  have had their turn. The reference keeps a running score set and
+  applies ``summed − old_i + new_i`` (outer-join arithmetic J11,
+  CoordinateDescent.scala:412-415,441-446); see the trade-off below
 - warm start on iterations ≥ 2 (M7): fixed effects re-fit (IRLS
   converges in a few rounds anyway), random effects get the previous
   model table as ``prior_model`` (x0 per entity)
 - locked coordinates (M8): scored with their pre-trained model, never
   re-trained (FixedEffectModelCoordinate analog)
 
-Cache discipline (the reference persists+counts every intermediate,
-RandomEffectDataset.scala:279-341): the running score sum is
-checkpointed per update and the superseded generation is released
-after its replacement materializes. Per-coordinate score frames are
-materialized KIND-CONDITIONALLY (r14, see _SCORE_CHECKPOINT_KINDS):
-a FIXED coordinate's score is a shuffle-free literal projection of the
-cached training frame — kept lazy, because re-deriving it on the one
-later read (the refit subtraction) is cheaper than writing a second
-row-set-sized generation per update (r13). A RANDOM coordinate's score
-re-runs a model-table join on every lazy read, which the r13 bench
-measured as net-negative — it is checkpointed once per update, with
-the superseded generation released like the summed frames.
+Cache discipline: the input is persisted for the loop, and the only
+frame materialized per update is a random coordinate's new model table
+(a SERIALIZED eager localCheckpoint — one row per entity, not per
+training row). The table it supersedes is released as soon as the new
+one exists, since it was read for the last time as the fit's prior.
+When the loop returns, the input persist is dropped and the final
+model tables (returned inside the model) are the only checkpoints left;
+when a fit raises, every table the loop checkpointed is released too.
 
-Lineage discipline: the running score sum is rebuilt from its own
-previous generation every update, so its LOGICAL plan doubles per
-generation (cache substitution keeps execution cheap, but analysis/
-codegen of the exponentially growing plan OOMs the driver after ~20
-generations — measured locally). Each persisted generation is
-therefore ``localCheckpoint``-ed, which truncates the plan to a leaf.
-The reference's RDD design has the same discipline implicitly (RDD
-lineage is per-partition, and persist+count cuts recompute, not plan
-size — DataFrames need the explicit cut).
+Trade-off of the re-derived residual: a fixed coordinate's score is a
+literal dot product inside the projection, so re-deriving it is free.
+A random coordinate's score is a left join against its checkpointed
+model table, which Catalyst broadcasts while the table fits under the
+broadcast threshold; each OTHER random coordinate whose table is too
+big to broadcast costs one entity join per update. The incremental
+form pays two uid shuffles (``add_scores`` + ``attach_residual_offset``)
+and up to three row-set-sized checkpoints per update instead — most of
+the loop's Spark jobs. The re-derivation is linear in the number of
+coordinates; every configuration in the tests and the benchmark has at
+most 3.
+
+Lineage discipline: each update's training frame is built from the
+pinned input plus one scoring step per other coordinate, and the model
+tables it joins are checkpoint leaves (or the caller's frames, for
+locked and pretrained coordinates) — so every plan stays
+O(#coordinates) however many iterations run, and no lineage cut is
+needed.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from photon_ml_spark.ml import glm as glm_mod
 from photon_ml_spark.ml import random_effects as re_mod
 from photon_ml_spark.ml import scoring
-from photon_ml_spark.operators.indexing import release_local_checkpoint
-
-
-#: Coordinate kinds whose per-coordinate score frame is CHECKPOINTED
-#: instead of left lazy (see train_game's score-materialization note).
-#: A fixed coordinate's score is a literal dot product over the cached
-#: training frame — re-deriving it on the refit subtraction is cheaper
-#: than a row-set-sized checkpoint per update (r13). A RANDOM
-#: coordinate's score is a join against the per-entity model table,
-#: and the lazy form re-runs that join on every downstream read (the
-#: refit's fit input AND the summed-score checkpoint) — measured
-#: net-negative at bench scale (r14 interleaved A/B), so random scores
-#: are materialized once per update again. Module-level so the A/B
-#: harness can flip it; not part of the public API.
-_SCORE_CHECKPOINT_KINDS = frozenset({"random"})
+from photon_ml_spark.operators.indexing import (
+    local_checkpoint_fits_broadcast,
+    release_local_checkpoint,
+)
 
 
 @dataclass
@@ -150,21 +147,27 @@ class GameModel:
         training (per-update validation, CoordinateDescent.scala:
         312-333) only the coordinates fitted SO FAR contribute —
         configs without a model yet are skipped."""
-        out = df
         fitted = [n for n in self.configs if n in self.coordinates]
         if not fitted:
             raise ValueError("GameModel.score: no fitted coordinates")
-        parts = []
-        for name in fitted:
-            col = f"__score_{name}"
-            out = _score_coordinate(out, self.configs[name], self.coordinates[name], col)
-            parts.append(F.col(col))
-        total = parts[0]
-        for p in parts[1:]:
-            total = total + p
-        return out.withColumn(out_col, total).drop(
-            *[f"__score_{n}" for n in fitted]
+        return _with_score_sum(
+            df, [(self.configs[n], self.coordinates[n]) for n in fitted],
+            out_col,
         )
+
+
+def _with_score_sum(df: DataFrame, items, out_col: str,
+                    base: Column | None = None) -> DataFrame:
+    """``df`` with ``out_col = base + Σ`` the scores of the
+    ``(config, model)`` items, as one projection over ``df``."""
+    out, total = df, base
+    for cfg, model in items:
+        col = f"__score_{cfg.name}"
+        out = _score_coordinate(out, cfg, model, col)
+        total = F.col(col) if total is None else total + F.col(col)
+    return out.withColumn(out_col, total).drop(
+        *[f"__score_{cfg.name}" for cfg, _ in items]
+    )
 
 
 def _score_coordinate(df: DataFrame, cfg: CoordinateConfig, model, out_col: str) -> DataFrame:
@@ -176,6 +179,8 @@ def _score_coordinate(df: DataFrame, cfg: CoordinateConfig, model, out_col: str)
     mt = model.select(
         F.col("entity").alias(cfg.entity_col), "coefficients", "intercept"
     )
+    if local_checkpoint_fits_broadcast(model):
+        mt = F.broadcast(mt)
     return scoring.score_random_effect(
         df, mt, entity_col=cfg.entity_col,
         indices_col=cfg.indices_col, values_col=cfg.values_col, out_col=out_col,
@@ -260,159 +265,85 @@ def train_game(
     emit ``CoordinateUpdateEvent``s to registered listeners while the
     loop is still running (events.py)."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()
-
     model = GameModel(family=family, configs={c.name: c for c in coordinates})
-    score_dfs: dict[str, DataFrame] = {}
-    summed: DataFrame | None = None  # (uid, score) running total
     history: list[dict] = []
-    ours: set[int] = set()  # ids of RE model frames THIS loop checkpointed
-    score_ckpts: set[int] = set()  # ids of CHECKPOINTED score frames
-
-    def _persist(d: DataFrame) -> DataFrame:
-        # eager localCheckpoint: materializes AND truncates the logical
-        # plan (see module docstring). SERIALIZED storage, explicitly:
-        # the checkpointed generations are row-set-sized (every uid ×
-        # score, once per coordinate update) and the localCheckpoint default
-        # level stores DESERIALIZED row objects — at the 100x stress
-        # scale (60M rows) that is one JVM object graph per row per
-        # generation and OOMed a 24g heap in the first x100 summed-
-        # score join (r13 decade run); serialized blocks hold the same
-        # generations in ~2.5 GB. Same storage rule as PLANS.md's
-        # corpus-scale persist discipline. On a multi-executor cluster
-        # with executor churn, prefer reliable checkpoints
-        # (spark.sparkContext.setCheckpointDir + df.checkpoint).
-        return d.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-
-    # Warm start (M7/M9): a non-locked coordinate carrying a
-    # ``pretrained`` model enters the loop as x0/prior ONLY — a random
-    # coordinate receives it as prior on its first update (with
-    # carry-forward for data-less entities). Its scores do NOT join
-    # the running sum before the coordinate is first trained: the
-    # reference trains the first coordinate of iteration 1 with
-    # residualsOpt = None (CoordinateDescent.scala:383-394 — initial
-    # models are starting points, only already-updated coordinates
-    # contribute residuals). Locked coordinates keep being scored
-    # inside the loop as before.
-    for cfg in coordinates:
-        if cfg.pretrained is not None and not cfg.locked:
-            model.coordinates[cfg.name] = cfg.pretrained
-
-    for it in range(1, n_iterations + 1):
+    ours: dict[str, DataFrame] = {}  # RE model tables THIS loop checkpointed
+    # coordinates whose current model contributes residual scores: the
+    # ones that have had their turn (see the warm-start note below)
+    scored: dict[str, CoordinateConfig] = {}
+    try:
+        df.count()
+        # Warm start (M7/M9): a non-locked coordinate carrying a
+        # ``pretrained`` model enters the loop as x0/prior ONLY — a
+        # random coordinate receives it as prior on its first update
+        # (with carry-forward for data-less entities). Its scores do
+        # NOT enter the residual offset before the coordinate is first
+        # trained: the reference trains the first coordinate of
+        # iteration 1 with residualsOpt = None (CoordinateDescent.scala:
+        # 383-394 — initial models are starting points, only already-
+        # updated coordinates contribute residuals).
         for cfg in coordinates:
-            # residual offset = base offset + all OTHER coordinates' scores
-            if summed is not None and cfg.name in score_dfs:
-                others = scoring.add_scores(
-                    summed, score_dfs[cfg.name], uid_col=uid_col, sign=-1
+            if cfg.pretrained is not None and not cfg.locked:
+                model.coordinates[cfg.name] = cfg.pretrained
+
+        for it in range(1, n_iterations + 1):
+            for cfg in coordinates:
+                # residual offset = base offset + the OTHER scored
+                # coordinates' current scores (J1/J2)
+                others = [
+                    (c, model.coordinates[n])
+                    for n, c in scored.items() if n != cfg.name
+                ]
+                data = _with_score_sum(
+                    df, others, offset_col, base=F.col(offset_col)
                 )
-            else:
-                others = summed
-            if others is not None:
-                data = scoring.attach_residual_offset(
-                    df, others, uid_col=uid_col, offset_col=offset_col
-                )
-            else:
-                data = df
+                if cfg.locked:
+                    coord_model = cfg.pretrained
+                else:
+                    # previous generation of THIS coordinate: random gets
+                    # it as prior/carry-forward, fixed as optimizer x0
+                    prior = model.coordinates.get(cfg.name)
+                    coord_model = _fit_coordinate(
+                        data, cfg, family, prior, offset_col, uid_col=uid_col
+                    )
+                    if cfg.kind == "random":
+                        # eager: the fit runs once, and later reads
+                        # (residual scoring, validation, the next
+                        # update's prior) hit the blocks. SERIALIZED
+                        # storage, explicitly: the localCheckpoint
+                        # default keeps one deserialized JVM object
+                        # graph per row (the PLANS.md corpus-scale
+                        # persist rule). On a multi-executor cluster
+                        # with executor churn, prefer reliable
+                        # checkpoints (setCheckpointDir + checkpoint).
+                        coord_model = coord_model.localCheckpoint(
+                            eager=True,
+                            storageLevel=StorageLevel.MEMORY_AND_DISK,
+                        )
+                        # the superseded table was read for the last
+                        # time by the checkpoint just taken (as the
+                        # prior); a caller's pretrained frame is not
+                        # ours to drop
+                        if cfg.name in ours:
+                            release_local_checkpoint(ours[cfg.name])
+                        ours[cfg.name] = coord_model
+                model.coordinates[cfg.name] = coord_model
+                scored[cfg.name] = cfg
 
-            prior_to_release = None
-            if cfg.locked:
-                coord_model = cfg.pretrained
-            else:
-                # previous generation of THIS coordinate: random gets
-                # it as prior/carry-forward, fixed as optimizer x0
-                prior = model.coordinates.get(cfg.name)
-                coord_model = _fit_coordinate(
-                    data, cfg, family, prior, offset_col, uid_col=uid_col
-                )
-                if cfg.kind == "random":
-                    coord_model = _persist(coord_model)
-                    ours.add(id(coord_model))
-                    # the superseded RE model table served as prior/x0
-                    # for the fit just materialized — but the LAZY
-                    # per-coordinate score below still references it
-                    # through ``others``/``base`` until the new summed
-                    # generation materializes, so the release happens
-                    # AFTER the summed checkpoint (only generations
-                    # THIS loop checkpointed: a caller-provided
-                    # pretrained frame is not ours to drop)
-                    if prior is not None and id(prior) in ours:
-                        prior_to_release = prior
-            model.coordinates[cfg.name] = coord_model
-
-            # Score materialization is KIND-CONDITIONAL (r14, refining
-            # the r13 all-lazy rule after the interleaved A/B): a FIXED
-            # coordinate's score is a shuffle-free literal dot product
-            # over the cached training frame — lazy, because re-deriving
-            # it on the refit subtraction is cheaper than a row-set-
-            # sized checkpoint per update. A RANDOM coordinate's score
-            # is a join against the (checkpointed) per-entity model
-            # table, and the lazy form re-runs that join on EVERY
-            # downstream read — the refit's fit input and the summed
-            # checkpoint — which the r13 bench measured as net-negative;
-            # it is checkpointed once per update and the superseded
-            # generation released below. Numerics identical either way —
-            # same expressions over the same pinned rows (checkpoint is
-            # row-transparent).
-            new_score = _score_coordinate(df, cfg, coord_model, "score").select(
-                uid_col, "score"
-            )
-            old_score = score_dfs.get(cfg.name)
-            if cfg.kind in _SCORE_CHECKPOINT_KINDS:
-                new_score = _persist(new_score)
-                score_ckpts.add(id(new_score))
-
-            # incremental summed-score maintenance (J11): summed − old + new
-            old_summed = summed
-            if summed is None:
-                summed = _persist(new_score)
-            else:
-                base = others if cfg.name in score_dfs else summed
-                summed = _persist(
-                    scoring.add_scores(base, new_score, uid_col=uid_col)
-                )
-            # Release superseded generations. These frames are eager
-            # localCheckpoints, so plain unpersist() is a NO-OP on them
-            # (checkpoint blocks are RDD-level storage, not CacheManager
-            # entries) — without the explicit release the loop
-            # accumulates a row-set-sized stale frame per coordinate
-            # update until driver GC. Score frames are lazy and never
-            # alias a summed generation, so the release is
-            # unconditional.
-            if old_summed is not None and old_summed is not summed:
-                release_local_checkpoint(old_summed)
-            if prior_to_release is not None:
-                release_local_checkpoint(prior_to_release)
-                ours.discard(id(prior_to_release))
-            # the superseded CHECKPOINTED score generation of this
-            # coordinate was read for the last time by the summed
-            # checkpoint just materialized (through ``others``) —
-            # release its blocks now (lazy score frames have nothing
-            # to release)
-            if old_score is not None and id(old_score) in score_ckpts:
-                release_local_checkpoint(old_score)
-                score_ckpts.discard(id(old_score))
-            score_dfs[cfg.name] = new_score
-
-            entry = {"iteration": it, "coordinate": cfg.name}
-            if validation_df is not None and evaluator is not None:
-                scored_val = model.score(validation_df)
-                entry["metrics"] = evaluator(scored_val)
-            history.append(entry)
-            if on_update is not None:
-                on_update(entry)
-
-    df.unpersist()
-    # the running sum and the per-coordinate score generations are loop
-    # internals — nothing in the returned (model, history) reads them,
-    # so their checkpoint blocks are released here (lazy score frames
-    # have nothing to release); the final RE model tables (returned
-    # inside the model) are the only checkpointed frames that outlive
-    # the call
-    if summed is not None:
-        release_local_checkpoint(summed)
-    for s in score_dfs.values():
-        if id(s) in score_ckpts:
-            release_local_checkpoint(s)
+                entry = {"iteration": it, "coordinate": cfg.name}
+                if validation_df is not None and evaluator is not None:
+                    scored_val = model.score(validation_df)
+                    entry["metrics"] = evaluator(scored_val)
+                history.append(entry)
+                if on_update is not None:
+                    on_update(entry)
+    except BaseException:
+        # the final RE model tables are returned inside the model; on
+        # an error nothing is returned, so every table the loop
+        # checkpointed is released
+        for t in ours.values():
+            release_local_checkpoint(t)
+        raise
+    finally:
+        df.unpersist()
     return model, history

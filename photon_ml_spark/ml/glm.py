@@ -244,26 +244,28 @@ def fit_fixed_effect(
         glr.setWeightCol(weight_col)
     if offset_col:
         glr.setOffsetCol(offset_col)
-    model = glr.fit(vec_df)
-    # training diagnostics (the legacy driver's model log, A12 inputs:
-    # Evaluation.scala / Driver.computeAndLogModelMetrics) — extracted
-    # BEFORE unpersist: each first access runs a predictions pass over
-    # vec_df, which must hit the cache, not recompute the lineage
-    s = model.summary
-    meta = {"iterations": s.numIterations}  # stored by training — no job
-    # ``diagnostics=False`` (r13, guide §1.2: don't compute what you
-    # throw away): each summary statistic below is a SEPARATE
-    # aggregation job over the predictions frame — ~4 extra passes per
-    # fit. Iterative callers (the CD loop fits one coordinate per
-    # update) and the bench flagship never read them; the model-log
-    # paths keep the default.
-    if diagnostics:
-        for attr in ("deviance", "nullDeviance", "aic", "dispersion"):
-            try:
-                meta[attr] = float(getattr(s, attr))
-            except Exception:
-                pass
-    vec_df.unpersist()
+    try:
+        model = glr.fit(vec_df)
+        # training diagnostics (the legacy driver's model log, A12 inputs:
+        # Evaluation.scala / Driver.computeAndLogModelMetrics) — extracted
+        # BEFORE unpersist: each first access runs a predictions pass over
+        # vec_df, which must hit the cache, not recompute the lineage
+        s = model.summary
+        meta = {"iterations": s.numIterations}  # stored by training — no job
+        # ``diagnostics=False`` (r13, guide §1.2: don't compute what you
+        # throw away): each summary statistic below is a SEPARATE
+        # aggregation job over the predictions frame — ~4 extra passes per
+        # fit. Iterative callers (the CD loop fits one coordinate per
+        # update) and the bench flagship never read them; the model-log
+        # paths keep the default.
+        if diagnostics:
+            for attr in ("deviance", "nullDeviance", "aic", "dispersion"):
+                try:
+                    meta[attr] = float(getattr(s, attr))
+                except Exception:
+                    pass
+    finally:
+        vec_df.unpersist()
     return FixedEffectGLM(
         family=family,
         coefficients=np.asarray(model.coefficients.toArray(), dtype=np.float64),

@@ -66,6 +66,33 @@ def release_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def local_checkpoint_fits_broadcast(df: DataFrame) -> bool:
+    """True when ``df`` is a fully materialized ``localCheckpoint`` whose
+    stored blocks fit under the session's broadcast-join threshold.
+
+    Catalyst cannot tell this itself: a checkpoint keeps the size
+    estimate of the plan it was cut from, and that estimate multiplies
+    through every join upstream — a per-entity table fitted on a joined
+    frame reads as gigabytes and is sort-merge joined. The stored block
+    size is the real figure. Best-effort (reaches through py4j
+    internals, like ``release_local_checkpoint``); anything else —
+    including a frame that is not a checkpoint — reads as False.
+    """
+    try:
+        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+        jss = df.sparkSession._jsparkSession
+        limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
+        for info in jss.sparkContext().getRDDStorageInfo():
+            if info.id() == rdd_id:
+                return (
+                    info.numCachedPartitions() == info.numPartitions()
+                    and info.memSize() + info.diskSize() <= limit
+                )
+    except Exception:
+        pass
+    return False
+
+
 def zip_with_index(
     df: DataFrame,
     order_cols: str | list[str],

@@ -147,13 +147,11 @@ def test_active_cap_inside_loop_equals_precapped_fit(assembled):
 
 
 def test_train_game_releases_loop_internals(spark, assembled):
-    """The CD loop's per-update score frames and running-sum
-    generations are eager localCheckpoints, invisible to
-    DataFrame.unpersist — train_game must release every superseded
-    generation AND its loop internals on exit, leaving exactly the
-    final random-effect model tables cached (they are returned inside
-    the model). Without the explicit release the loop leaks two
-    row-set-sized stale frames per coordinate update."""
+    """The CD loop's random-effect model tables are eager
+    localCheckpoints, invisible to DataFrame.unpersist — train_game
+    must release every superseded table AND its input persist on exit,
+    leaving exactly the final random-effect model tables cached (they
+    are returned inside the model)."""
     jsc = spark.sparkContext._jsc
     assembled.count()  # make sure the fixture cache is registered
     before = set(jsc.getPersistentRDDs().keySet())
@@ -176,3 +174,79 @@ def test_train_game_releases_loop_internals(spark, assembled):
     )
     # the surviving model table must still be readable (not released)
     assert model.coordinates["per-supplier"].count() > 0
+
+
+def _tiny_game_frame(spark):
+    return spark.range(300).select(
+        F.col("id").alias("uid"),
+        (F.col("id") % 3 == 0).cast("double").alias("response"),
+        F.lit(0.0).alias("offset"),
+        F.lit(1.0).alias("weight"),
+        (F.col("id") % 7).cast("string").alias("ent"),
+        F.array(F.lit(0).cast("long")).alias("fi"),
+        F.array((F.col("id") % 5).cast("double")).alias("fv"),
+    )
+
+
+def _tiny_coords(*extra):
+    return [
+        CoordinateConfig(name="g", kind="fixed", dim=1,
+                         indices_col="fi", values_col="fv"),
+        CoordinateConfig(name="r", kind="random", dim=1, entity_col="ent",
+                         reg_param=1.0, indices_col="fi", values_col="fv"),
+        *extra,
+    ]
+
+
+def test_train_game_failure_releases_loop_internals(spark):
+    """A coordinate whose fit raises mid-loop (a random effect on a
+    missing entity column, after a fixed and a random coordinate) must
+    not leave the input persist or the loop's model-table checkpoints
+    cached."""
+    df = _tiny_game_frame(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    bad = CoordinateConfig(name="bad", kind="random", dim=1,
+                           entity_col="no_such_col", reg_param=1.0,
+                           indices_col="fi", values_col="fv")
+    with pytest.raises(Exception):
+        train_game(df, _tiny_coords(bad), family="binomial", n_iterations=1)
+    leaked = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not leaked, f"failed train_game leaked cached RDDs {leaked}"
+
+
+def test_train_game_job_shape(spark, monkeypatch):
+    """The loop materializes only the random-effect model tables: for
+    1 fixed + 1 random coordinate over 2 iterations, exactly one
+    localCheckpoint per random update, and every training frame handed
+    to a fit is a projection of the pinned input — no score-set
+    full-outer join (the running-sum arithmetic it replaced)."""
+    from photon_ml_spark.ml import coordinate_descent as cd
+    from photon_ml_spark.operators.indexing import release_local_checkpoint
+
+    df = _tiny_game_frame(spark)
+    frame_cls = type(df)  # the concrete DataFrame class of this session
+    calls = []
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def counting_checkpoint(self, *a, **k):
+        calls.append(1)
+        return real_checkpoint(self, *a, **k)
+
+    plans = []
+    real_fit = cd._fit_coordinate
+
+    def recording_fit(data, *a, **k):
+        plans.append(data._jdf.queryExecution().executedPlan().toString())
+        return real_fit(data, *a, **k)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting_checkpoint)
+    monkeypatch.setattr(cd, "_fit_coordinate", recording_fit)
+    model, history = train_game(
+        df, _tiny_coords(), family="binomial", n_iterations=2,
+    )
+    assert len(history) == 4
+    assert len(calls) == 2
+    assert len(plans) == 4
+    assert not [p for p in plans if "FullOuter" in p]
+    release_local_checkpoint(model.coordinates["r"])

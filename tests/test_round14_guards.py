@@ -1,7 +1,7 @@
 """Round-14 optimization guards: pins for the behaviors the r14
-changes introduced — tie-cache dedupe semantics, scoped drain,
-CD score-checkpoint release discipline, Catalyst fake decoders ==
-Python stubs, and deterministic sampled IVF quantizer training."""
+changes introduced — CD checkpoint release discipline, Catalyst fake
+decoders == Python stubs, and deterministic sampled IVF quantizer
+training."""
 
 import hashlib
 
@@ -11,93 +11,12 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_tie_cache_dedupes_plan_identical_calls(spark):
-    """Plan-identical metric calls share ONE registry entry (r14): the
-    r13 registry appended one handle per call, all sharing one
-    CacheManager entry, so LRU-evicting the oldest handle unpersisted
-    data a newer 'cached' slot still expected hot."""
-    from photon_ml_spark.functions import metrics
-
-    metrics.release_roc_tie_cache()
-    df = spark.range(500).select(
-        (F.col("id") * 13 % 89).cast("double").alias("score"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    a = metrics.auroc(df).first().auroc
-    n1 = len(metrics._TIE_CACHE)
-    metrics.aupr(df).first()
-    metrics.peak_f1(df).first()
-    assert len(metrics._TIE_CACHE) == n1 == 1
-    # the shared entry stays hot through repeated plan-identical calls
-    lvl = metrics._TIE_CACHE[0].storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    assert metrics.auroc(df).first().auroc == a
-    metrics.release_roc_tie_cache()
-
-
-def test_tie_cache_eviction_cannot_unpersist_reused_entry(spark):
-    """Filling the registry with DISTINCT plans must never unpersist
-    the entry a plan-identical newer call is reusing — the MRU move on
-    a dedupe hit protects it from LRU eviction."""
-    from photon_ml_spark.functions import metrics
-
-    metrics.release_roc_tie_cache()
-    hot = spark.range(300).select(
-        (F.col("id") * 7 % 101).cast("double").alias("score"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    metrics.auroc(hot).first()
-    entry = metrics._TIE_CACHE[-1]
-    # re-register (dedupe hit -> MRU), then push MAX-1 distinct plans:
-    # the hot entry must survive and stay persisted
-    metrics.aupr(hot).first()
-    for i in range(metrics._TIE_CACHE_MAX - 1):
-        cold = spark.range(200).select(
-            (F.col("id") * (i + 3) % 97).cast("double").alias("score"),
-            (F.col("id") % 2).cast("double").alias("label"),
-        )
-        metrics.auroc(cold).first()
-    assert any(g is entry for g in metrics._TIE_CACHE)
-    lvl = entry.storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    metrics.release_roc_tie_cache()
-
-
-def test_tie_cache_scoped_drain_keeps_marked_entries(spark):
-    """release_roc_tie_cache(keep=mark) drains only entries registered
-    after the mark — one consumer's cleanup cannot evict cache entries
-    an unrelated in-flight evaluation is reading (r13 advice)."""
-    from photon_ml_spark.functions import metrics
-
-    metrics.release_roc_tie_cache()
-    outer = spark.range(400).select(
-        (F.col("id") * 11 % 103).cast("double").alias("score"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    metrics.auroc(outer).first()
-    mark = metrics.roc_tie_cache_mark()
-    inner = spark.range(250).select(
-        (F.col("id") * 17 % 107).cast("double").alias("score"),
-        (F.col("id") % 2).cast("double").alias("label"),
-    )
-    metrics.auroc(inner).first()
-    assert len(metrics._TIE_CACHE) == 2
-    metrics.release_roc_tie_cache(keep=mark)
-    assert len(metrics._TIE_CACHE) == 1
-    lvl = metrics._TIE_CACHE[0].storageLevel
-    assert lvl.useMemory or lvl.useDisk  # the outer entry survived, hot
-    metrics.release_roc_tie_cache()
-    assert not metrics._TIE_CACHE
-
-
 def test_train_game_releases_score_checkpoints(spark):
-    """The r14 kind-conditional score checkpoints are loop internals:
-    after train_game returns, the only surviving checkpointed frames
-    are the returned RE model tables — score generations and summed
-    frames are all released (no per-call RDD-block leak)."""
+    """After train_game returns, the only surviving checkpointed frames
+    are the returned RE model tables — superseded tables and the
+    training cache are all released (no per-call RDD-block leak)."""
     from photon_ml_spark.ml import coordinate_descent as cd
 
-    assert cd._SCORE_CHECKPOINT_KINDS == frozenset({"random"})
     df = spark.range(600).select(
         F.col("id").alias("uid"),
         (F.col("id") % 3).cast("double").alias("response"),
